@@ -330,13 +330,14 @@ def _jaccard_pairs(dialect: str) -> str:
         # shingle rewrite was tried here and REVERTED — a same-session
         # interleaved A/B at sf0.1 (3 reps each, noop sink) measured the
         # lateral form ~25% SLOWER than this HOF form for this query
-        # (old 4.11/4.40/5.04 s vs new 5.24/5.34/5.54 s): the shingle
-        # subtree is re-evaluated 3x here, and the sequence-explode
-        # Generate emits one row per position BEFORE the DISTINCT,
-        # tripling the pre-aggregation row count, which outweighs the
-        # HOF's CodegenFallback cost. The DF twin materializes shingles
-        # once, where the codegen slicing does win (see
-        # jaccard_pairs_df).
+        # (old 4.11/4.40/5.04 s vs new 5.24/5.34/5.54 s). Both forms
+        # emit the same one row per position before the DISTINCT, so
+        # row counts are identical; what differs is plan and codegen
+        # shape — a Generate over the position sequence plus a
+        # per-row substring Project, in a subtree re-evaluated 3x here,
+        # against one interpreted HOF array build per document. The DF
+        # twin materializes shingles once, where the codegen slicing
+        # does win (see jaccard_pairs_df).
         return f"""
 WITH sh AS (
   SELECT DISTINCT doc_id, explode({sh}) AS s
@@ -588,87 +589,6 @@ def jaccard_pairs_df(
         return out.localCheckpoint(eager=True)
     finally:
         sh.unpersist(blocking=False)
-
-
-def fingerprint_pairs_df(
-    spark: SparkSession, sf_dir: str, release_cache: bool = True
-) -> DataFrame:
-    """Persisted-fingerprint variant of ``dedup_fingerprint_pairs`` — the
-    100x-scale shape, same fix as ``jaccard_pairs_df``. The SQL form's
-    winnow CTE (per-position hash explode + ROWS-window min + DISTINCT)
-    is referenced by sizes, rare-index and both join sides, and Spark's
-    CTE inlining re-evaluates it each time: the physical plan carries 12
-    parquet scans. Persisting the fingerprint table ONCE
-    (MEMORY_AND_DISK) leaves a single winnow evaluation; pairs come from
-    bounded per-fingerprint buckets (df-prefilter -> semi-join ->
-    collect_list of <= 20 ids -> JVM nested-transform pair expansion,
-    same shape as ``jaccard_pairs_df``) instead of an E-sized self-join;
-    output is value-identical, and the DuckDB oracle is shared.
-
-    Honest local A/B (sf0.1, local[32], warm): with the array-form winnow
-    (no explode, no window shuffle) this variant is now faster locally
-    TOO — 5.8 s vs the SQL form's 10.7 s — because the persisted table is
-    just the ~443k (doc_id, fingerprint) rows while the SQL form still
-    pays 4 winnow evaluations. (Under the old explode+window winnow the
-    local verdict was reversed: SQL 12.8 s vs 16.0 s, recorded in
-    BENCH/BASELINE.md.) At cluster scale the gap widens: re-evaluating
-    the winnow 4x is 4 extra passes over 100 TB of text. Cache hygiene
-    follows jaccard_pairs_df:
-    release_cache=True (default) eagerly materializes via localCheckpoint
-    and releases the fingerprint cache before returning."""
-    from pyspark import StorageLevel
-
-    register_views(spark, sf_dir)
-    fp = spark.sql(_fingerprint_winnow("spark")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sizes = fp.groupBy("doc_id").agg(F.count("*").alias("n"))
-    rare = (
-        fp.groupBy("fingerprint")
-        .agg(F.count("*").alias("df"))
-        .filter((F.col("df") >= 2) & (F.col("df") <= 20))
-        .select("fingerprint")
-    )
-    buckets = (
-        fp.join(rare, on="fingerprint")
-        .groupBy("fingerprint")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-    )
-    # same bounded-bucket pair expansion as jaccard_pairs_df: the
-    # df <= 20 prefilter ran BEFORE collect_list, so every array holds
-    # at most 20 ids — no E-sized self-join, no hot-key agg buffer
-    pairs = (
-        buckets.select(
-            F.explode(F.expr(_BUCKET_PAIR_EXPR)).alias("p")
-        )
-        .groupBy(
-            F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b")
-        )
-        .agg(F.count("*").alias("common_fp"))
-        .filter(F.col("common_fp") >= 3)
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    out = (
-        pairs.join(sa, on="doc_a")
-        .join(sb, on="doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "common_fp",
-            F.round(
-                F.col("common_fp").cast("double")
-                / F.least(F.col("na"), F.col("nb")),
-                4,
-            ).alias("overlap"),
-        )
-    )
-    if not release_cache:
-        return _attach_release(out, lambda: fp.unpersist(blocking=False))
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        fp.unpersist(blocking=False)
 
 
 def _cosine_topk(dialect: str, n_query: int = 8, topk: int = 3) -> str:
@@ -972,10 +892,25 @@ def _model_train_ngrams(dialect: str, max_n: int = 5) -> str:
     join is aggregate-table vs aggregate-table on (lang, n-1, prefix) —
     M-sized, not corpus-sized — and the unigram totals collapse to
     #langs rows broadcast into the final projection."""
-    return (
-        f"WITH counts AS ({_model_train_counts_sql(dialect, max_n)})"
-        f"{_model_train_final_sql()}"
-    )
+    # freq derivation (same text both dialects). Unigram totals are a
+    # WINDOW over the aggregate table, not another reference to it —
+    # Spark inlines CTEs, so every reference would re-explode the corpus.
+    return f"""WITH counts AS ({_model_train_counts_sql(dialect, max_n)})
+SELECT c1.lang, CAST(c1.n AS INT) AS n, c1.g AS ngram,
+       CAST(CASE WHEN c1.n = 1
+                 THEN CAST(c1.c AS DOUBLE) / c1.uni_total
+                 ELSE CAST(c1.c AS DOUBLE) / cp.c END AS FLOAT) AS freq
+FROM (
+  SELECT lang, n, g, c,
+         sum(CASE WHEN n = 1 THEN c END) OVER (PARTITION BY lang)
+           AS uni_total
+  FROM counts
+) c1
+LEFT JOIN counts cp
+  ON c1.n >= 2 AND cp.lang = c1.lang AND cp.n = c1.n - 1
+ AND cp.g = substring(c1.g, 1, c1.n - 1)
+WHERE c1.n = 1 OR cp.c IS NOT NULL
+"""
 
 
 def _model_train_counts_sql(dialect: str, max_n: int = 5) -> str:
@@ -1027,29 +962,6 @@ GROUP BY lang, n, g
 """
 
 
-def _model_train_final_sql(counts_ref: str = "counts") -> str:
-    """freq derivation over a counts relation (same text both dialects).
-    Unigram totals are a WINDOW over the aggregate table, not another
-    reference to it — Spark inlines CTEs, so every reference would
-    re-explode the corpus."""
-    return f"""
-SELECT c1.lang, CAST(c1.n AS INT) AS n, c1.g AS ngram,
-       CAST(CASE WHEN c1.n = 1
-                 THEN CAST(c1.c AS DOUBLE) / c1.uni_total
-                 ELSE CAST(c1.c AS DOUBLE) / cp.c END AS FLOAT) AS freq
-FROM (
-  SELECT lang, n, g, c,
-         sum(CASE WHEN n = 1 THEN c END) OVER (PARTITION BY lang)
-           AS uni_total
-  FROM {counts_ref}
-) c1
-LEFT JOIN {counts_ref} cp
-  ON c1.n >= 2 AND cp.lang = c1.lang AND cp.n = c1.n - 1
- AND cp.g = substring(c1.g, 1, c1.n - 1)
-WHERE c1.n = 1 OR cp.c IS NOT NULL
-"""
-
-
 def _ppl_trigram_score(dialect: str) -> str:
     """Per-document character-TRIGRAM negative-log-likelihood under the
     per-language model trained by the distributed training job — true
@@ -1078,16 +990,7 @@ def _ppl_trigram_score(dialect: str) -> str:
     BROADCAST into the scoring join, so pass 2 (the per-doc trigram
     explode) never shuffles on the skewed trigram key; the only
     corpus-sized exchange is the final groupBy(doc_id). Docs with no
-    letter trigram (cleaned length < 3) are absent in both dialects."""
-    counts = _model_train_counts_sql(dialect, 3)
-    return (
-        f"WITH counts AS ({counts}){_ppl_final_sql(dialect, 'counts')}"
-    )
-
-
-def _ppl_final_sql(dialect: str, counts_ref: str) -> str:
-    """Scoring tail of ``_ppl_trigram_score`` over a counts relation —
-    split out so ``ppl_score_df`` can aim it at a PERSISTED counts view.
+    letter trigram (cleaned length < 3) are absent in both dialects.
 
     Round-6 Spark shape, two changes (results bit-identical, asserted):
 
@@ -1103,16 +1006,17 @@ def _ppl_final_sql(dialect: str, counts_ref: str) -> str:
       instead of hashing every position and regex-filtering every gram,
       same rewrite as ``_model_train_counts_sql``.
     """
+    counts = _model_train_counts_sql(dialect, 3)
     c = _cleaned(dialect)
     if dialect == "spark":
-        model = f"""
+        model = """
   SELECT lang, g, CAST(floor(ln(CAST(c AS DOUBLE) / c2) * 1000000.0)
                        AS BIGINT) AS w_fp
   FROM (
     SELECT lang, n, g, c,
            max(CASE WHEN n = 2 THEN c END)
              OVER (PARTITION BY lang, substring(g, 1, 2)) AS c2
-    FROM {counts_ref} WHERE n IN (2, 3)
+    FROM counts WHERE n IN (2, 3)
   ) mw WHERE n = 3
 """
         doctri = f"""
@@ -1132,11 +1036,11 @@ def _ppl_final_sql(dialect: str, counts_ref: str) -> str:
             " i -> substring(c, i::INT, 3)) ELSE [] END)"
         )
         letter = "regexp_matches(g, '^\\p{L}+$')"
-        model = f"""
+        model = """
   SELECT c3.lang, c3.g,
          CAST(floor(ln(CAST(c3.c AS DOUBLE) / c2.c) * 1000000.0)
               AS BIGINT) AS w_fp
-  FROM {counts_ref} c3 JOIN {counts_ref} c2
+  FROM counts c3 JOIN counts c2
     ON c3.n = 3 AND c2.n = 2 AND c2.lang = c3.lang
    AND c2.g = substring(c3.g, 1, 2)
 """
@@ -1148,7 +1052,7 @@ def _ppl_final_sql(dialect: str, counts_ref: str) -> str:
 """
         idiv = "//"
         hint = ""
-    return f""",
+    return f"""WITH counts AS ({counts}),
 model AS ({model}),
 doctri AS ({doctri})
 SELECT {hint}d.doc_id, d.lang,
@@ -1158,40 +1062,6 @@ SELECT {hint}d.doc_id, d.lang,
 FROM doctri d JOIN model m ON d.lang = m.lang AND d.g = m.g
 GROUP BY d.doc_id, d.lang
 """
-
-
-def ppl_score_df(
-    spark: SparkSession, sf_dir: str, release_cache: bool = True
-) -> DataFrame:
-    """One-training-pass twin of ``ppl_trigram_score`` (the canonical
-    graded entry): the (lang, n, ngram) count table is persisted ONCE
-    and both sides of the trigram/bigram ratio join read the cached
-    aggregate, so the corpus is scanned exactly twice (train + score) —
-    the pure-SQL form's inlined counts CTE trains twice. Same
-    cache-hygiene contract as ``model_train_df``: eager localCheckpoint
-    + release by default, ``release_cache=False`` hands the caller a
-    lazy plan with ``lingua_release()`` attached."""
-    import uuid
-
-    from pyspark import StorageLevel
-
-    register_views(spark, sf_dir)
-    counts = spark.sql(_model_train_counts_sql("spark", 3))
-    counts.persist(StorageLevel.MEMORY_AND_DISK)
-    view = f"__ppl_counts_{uuid.uuid4().hex}"
-    counts.createOrReplaceTempView(view)
-    out = spark.sql(f"WITH _one AS (SELECT 1){_ppl_final_sql('spark', view)}")
-    if release_cache:
-        out = out.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(view)
-        counts.unpersist(blocking=False)
-        return out
-
-    def _release():
-        spark.catalog.dropTempView(view)
-        counts.unpersist(blocking=False)
-
-    return _attach_release(out, _release)
 
 
 def _ppl_buckets_tail(dialect: str, ppl_ref: str, cap: int = 1000) -> str:
@@ -1248,87 +1118,34 @@ def ccnet_buckets_ppl_oracle_sql(cap: int = 1000) -> str:
 
 
 def ccnet_buckets_ppl(
-    spark: SparkSession, sf_dir: str, cap: int = 1000,
-    release_cache: bool = True,
+    spark: SparkSession, sf_dir: str, cap: int = 1000
 ) -> DataFrame:
     """CCNet bucketing by TRUE perplexity (round 5): head/middle/tail of
-    each language's trigram-LM NLL distribution. Composition of the two
-    canonical pieces: ``ppl_score_df`` materializes the per-doc score
-    table once (eager localCheckpoint — at production scale this is the
-    parquet metrics table a run would persist anyway), then the tail
-    references it three times (language counts, sample, assignment)
-    without re-running the two corpus passes; cutoffs come from the
-    capped md5-coin sample, so no per-language total order exists
-    anywhere. The SQL oracle is the same pipeline as one nested-CTE
-    query in DuckDB."""
+    each language's trigram-LM NLL distribution. The per-doc score table
+    (``ppl_trigram_score_sql``) is materialized once (eager
+    localCheckpoint — at production scale this is the parquet metrics
+    table a run would persist anyway), then the tail references it three
+    times (language counts, sample, assignment) without re-running the
+    two corpus passes; cutoffs come from the capped md5-coin sample, so
+    no per-language total order exists anywhere. The SQL oracle is the
+    same pipeline as one nested-CTE query in DuckDB."""
     import uuid
 
-    scores = ppl_score_df(spark, sf_dir, release_cache=True)
+    register_views(spark, sf_dir)
+    scores = spark.sql(SQL_QUERIES["ppl_trigram_score_sql"][0])
+    scores = scores.localCheckpoint(eager=True)
     view = f"__ppl_scores_{uuid.uuid4().hex}"
     scores.createOrReplaceTempView(view)
     out = spark.sql(f"WITH {_ppl_buckets_tail('spark', view)[1:]}")
-    if release_cache:
-        out = out.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(view)
-        return out
-    return _attach_release(
-        out, lambda: spark.catalog.dropTempView(view)
-    )
+    out = out.localCheckpoint(eager=True)
+    spark.catalog.dropTempView(view)
+    return out
 
 
 SQL_QUERIES["model_train_ngrams"] = (
     _model_train_ngrams("spark"),
     _model_train_ngrams("duckdb"),
 )
-
-
-def model_train_df(
-    spark: SparkSession, sf_dir: str, release_cache: bool = True
-) -> DataFrame:
-    """One-scan twin of ``model_train_ngrams`` — the shape a real
-    corpus-scale training run uses: the (lang, n, ngram) count table is
-    materialized ONCE (MEMORY_AND_DISK persist; the corpus-sized
-    explode+aggregate runs exactly once) and both the unigram-total
-    window and the prefix-denominator join read the cached aggregate.
-    The pure-SQL form re-derives counts per reference (2 corpus scans —
-    Spark inlines CTEs); at 10^12 turns that doubles the dominant
-    stage. Output is value-identical (pytest-pinned vs the SQL form and
-    bit-identical vs driver-side ``models.train_models``) and feeds
-    ``write_model_table`` / ``PackedModels.from_table`` directly."""
-    from pyspark import StorageLevel
-
-    import uuid
-
-    register_views(spark, sf_dir)
-    counts = spark.sql(_model_train_counts_sql("spark"))
-    counts.persist(StorageLevel.MEMORY_AND_DISK)
-    # per-call UNIQUE view name: a fixed name was silently clobbered by
-    # concurrent/repeated callers in the same session. The view must be
-    # a catalog view (not a {df} template arg — measured: template
-    # substitution re-parses the relation into a plan the cache manager
-    # does not match, silently losing the one-scan property), and it is
-    # dropped only on the eager path below because dropTempView also
-    # UNCACHES the plan.
-    view = f"__model_train_counts_{uuid.uuid4().hex}"
-    counts.createOrReplaceTempView(view)
-    out = spark.sql(_model_train_final_sql(view))
-    if release_cache:
-        # eager materialization (same hygiene as jaccard_pairs_df): the
-        # model table is localCheckpointed, then the corpus-sized cache
-        # is released; callers get a plan decoupled from the cache
-        out = out.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(view)  # also uncaches; unpersist is
-        counts.unpersist(blocking=False)  # then a no-op safety net
-    # release_cache=False: the view stays registered (unique name, no
-    # clobber risk) because dropping it would uncache the counts the
-    # caller's lazy plan still needs — out.lingua_release() drops both
-    if not release_cache:
-        def _release():
-            spark.catalog.dropTempView(view)
-            counts.unpersist(blocking=False)
-
-        return _attach_release(out, _release)
-    return out
 SQL_QUERIES["langid_stopwords"] = (
     _stopword_langid("spark"),
     _stopword_langid("duckdb"),
@@ -1515,7 +1332,7 @@ def _fingerprint_neardup_pairs(dialect: str, min_common: int = 3) -> str:
 
     Round-6 Spark shape: pairs come from bounded per-fingerprint
     BUCKETS (df-prefilter -> semi-join -> collect_list of <= 20 ids ->
-    JVM nested-transform pair expansion — the ``fingerprint_pairs_df``
+    JVM nested-transform pair expansion — the ``jaccard_pairs_df``
     shape) instead of the E-sized rfp self-join: one fewer corpus-sized
     join side and the agg buffers stay bounded by the prefilter. The
     DuckDB oracle keeps the classic relational self-join — results are
@@ -2290,8 +2107,8 @@ GROUP BY tr.doc_id
 # All-pairs expansion of a SORTED, CAPPED bucket array `ids` into
 # struct(a, b) with a < b, entirely JVM-side (no self-join): 1-based
 # slice start i+2 skips x itself and everything before it. Shared by
-# jaccard_pairs_df and fingerprint_pairs_df — a fix to the slice
-# arithmetic lands in both.
+# jaccard_pairs_df and the dedup_fingerprint_pairs_sql buckets — a fix
+# to the slice arithmetic lands in both.
 _BUCKET_PAIR_EXPR = (
     "flatten(transform(ids, (x, i) -> transform("
     "slice(ids, i + 2, size(ids)),"
@@ -2564,8 +2381,8 @@ def _dedup_substring_spans(dialect: str, k: int = 5) -> str:
     that point cut ultra-frequent shingles first (they are stopword-like
     boilerplate by definition — same operating decision as
     LSH_BUCKET_CAP) or switch the count to the two-pass partial-agg
-    form over a persisted position table (the
-    ``fingerprint_pairs_df`` pattern).
+    form over a persisted position table (the ``jaccard_pairs_df``
+    pattern).
 
     Span merge: intervals are all length {k} and sorted by start, so two
     spans merge iff ``pos - lag(pos) <= k`` (overlap or token-adjacent);
@@ -3290,12 +3107,10 @@ SQL_QUERIES["tfidf_top_terms"] = (
     _tfidf_top_terms("spark"),
     _tfidf_top_terms("duckdb"),
 )
-# the *_sql form is the oracle DEFINITION (round-4 verdict "What's wrong"
-# #2): its CTE-inlined winnow is re-evaluated 4x by Catalyst — 4 full
-# corpus passes at scale — so the canonical `dedup_fingerprint_pairs`
-# entry in __spark_entry__.queries() is fingerprint_pairs_df (one
-# persisted winnow evaluation); this SQL text stays registered (and
-# graded) as the independent cross-check of the same semantics.
+# also exposed as `dedup_fingerprint_pairs` by __spark_entry__.queries().
+# A persisted-fingerprint DataFrame shape (one winnow evaluation instead
+# of one per consumer) tied it at sf1.0 (19.5 s vs 19.4 s), so this is
+# the only implementation.
 SQL_QUERIES["dedup_fingerprint_pairs_sql"] = (
     _fingerprint_neardup_pairs("spark"),
     _fingerprint_neardup_pairs("duckdb"),

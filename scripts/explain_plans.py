@@ -189,26 +189,6 @@ def main() -> None:
         f" sort)\n\n```\n"
         f"{capture(budget_by_source(spark, SF_DIR, release_cache=False))}```\n"
     )
-    from lingua_spark.ops.queries import ppl_score_df
-
-    out.append(
-        f"\n## ppl_trigram_score (CANONICAL persisted-counts perplexity:"
-        f" ONE training explode — the SQL form's twice-referenced counts"
-        f" CTE trains twice; alphabet-bounded model broadcast into the"
-        f" scoring join)\n\n```\n"
-        f"{capture(ppl_score_df(spark, SF_DIR, release_cache=False))}```\n"
-    )
-    spark.catalog.clearCache()
-    from lingua_spark.ops.queries import ccnet_buckets_ppl
-
-    out.append(
-        f"\n## ccnet_buckets_ppl (true-perplexity bucketing: persisted"
-        f" per-doc score table referenced 3x without re-running the"
-        f" corpus passes; sampled tertile cutoffs broadcast — no"
-        f" per-language total order)\n\n```\n"
-        f"{capture(ccnet_buckets_ppl(spark, SF_DIR, release_cache=False))}```\n"
-    )
-    spark.catalog.clearCache()
     from lingua_spark.ops.dsir import dsir_select
 
     out.append(
@@ -229,19 +209,6 @@ def main() -> None:
         f" Bloom survivors reach the exact-confirm hash join)\n\n```\n"
         f"{capture(dedup_incremental_bloom(spark, SF_DIR, release_cache=False))}```\n"
     )
-
-    from lingua_spark.ops.queries import fingerprint_pairs_df
-
-    out.append(
-        f"\n## dedup_fingerprint_pairs (CANONICAL persisted-fingerprint"
-        f" shape, VERDICT r04 item 3: the winnow is evaluated ONCE into"
-        f" an InMemoryTableScan that sizes, rare-index and both join"
-        f" sides all read — vs the *_sql oracle form whose CTE Catalyst"
-        f" re-inlines 4x; release_cache=False shows the lazy"
-        f" composition)\n\n```\n"
-        f"{capture(fingerprint_pairs_df(spark, SF_DIR, release_cache=False))}```\n"
-    )
-    spark.catalog.clearCache()
 
     from lingua_spark.ops.multimodal import multimodal_features_summary
 

@@ -1297,51 +1297,37 @@ def test_quality_flag_counts_adversarial_inputs(spark):
     assert by_turn[4] == {"_clean"}
 
 
-def test_fingerprint_df_matches_sql_and_single_winnow(spark):
-    """fingerprint_pairs_df == the SQL form value for value, and its
-    lazy plan evaluates the winnow subtree exactly ONCE (one Window
-    node / one documents scan — the SQL form carries 12 scans via CTE
-    inlining)."""
-    import io as _io
-    from contextlib import redirect_stdout
-
-    from lingua_spark.ops.queries import (
-        SQL_QUERIES,
-        fingerprint_pairs_df,
-        register_views,
-    )
+@pytest.mark.parametrize(
+    "alias,sql_name",
+    [
+        ("dedup_fingerprint_pairs", "dedup_fingerprint_pairs_sql"),
+        ("ppl_trigram_score", "ppl_trigram_score_sql"),
+        ("model_train_df", "model_train_ngrams"),
+    ],
+)
+def test_registry_alias_matches_sql_form(spark, alias, sql_name):
+    """A registry alias runs the SQL form it is oracled by: it returns
+    the same rows as that SQL text and leaves no DataFrame cache
+    behind."""
+    import __spark_entry__ as entry
+    from lingua_spark.ops.queries import SQL_QUERIES, register_views
 
     sfd = "/root/testdata/sf0.001"
+    spark.catalog.clearCache()  # count only this alias' leftovers
     register_views(spark, sfd)
-    want = (
-        spark.sql(SQL_QUERIES["dedup_fingerprint_pairs_sql"][0])
-        .toPandas()
-        .sort_values(["doc_a", "doc_b"])
-        .reset_index(drop=True)
-    )
-    lazy = fingerprint_pairs_df(spark, sfd, release_cache=False)
+    want = spark.sql(SQL_QUERIES[sql_name][0]).toPandas()
+    key = sorted(want.columns)
+    want = want.sort_values(key).reset_index(drop=True)
     got = (
-        lazy.toPandas().sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
+        entry.queries()[alias](spark, sfd)
+        .toPandas()
+        .sort_values(key)
+        .reset_index(drop=True)
     )
     assert len(got) > 0
-    assert got.equals(want.astype(got.dtypes.to_dict()))
-    plan = lazy._jdf.queryExecution().executedPlan().toString()
-    # all four fingerprint consumers (sizes, rare index, both join
-    # sides) must read the CACHE — the plan printer re-prints the cached
-    # plan under every InMemoryTableScan, so counting Window/Scan nodes
-    # is meaningless; an inlined re-evaluation would surface as a
-    # FileScan+Window chain NOT wrapped in an InMemoryRelation
-    assert plan.count("InMemoryTableScan") >= 3, plan
-    spark.catalog.clearCache()
-    got2 = (
-        fingerprint_pairs_df(spark, sfd)
-        .toPandas()
-        .sort_values(["doc_a", "doc_b"])
-        .reset_index(drop=True)
-    )
-    assert got2.equals(got)
+    assert got.equals(want)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
-        "fingerprint_pairs_df leaked a DataFrame cache"
+        f"{alias} leaked a DataFrame cache"
     )
 
 
@@ -1611,32 +1597,6 @@ def test_ppl_trigram_score_invariants_on_corpus(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_ppl_score_df_matches_sql_form(spark):
-    """ppl_score_df (the canonical persisted-counts shape) is
-    value-identical to the SQL oracle form, and its plan reads the
-    counts aggregate from cache (one training explode, not two)."""
-    from lingua_spark.ops.queries import (
-        SQL_QUERIES,
-        ppl_score_df,
-        register_views,
-    )
-
-    register_views(spark, "/root/testdata/sf0.001")
-    want = (
-        spark.sql(SQL_QUERIES["ppl_trigram_score_sql"][0])
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    lazy = ppl_score_df(spark, "/root/testdata/sf0.001",
-                        release_cache=False)
-    plan = lazy._jdf.queryExecution().executedPlan().toString()
-    got = lazy.toPandas().sort_values("doc_id").reset_index(drop=True)
-    lazy.lingua_release()
-    assert "InMemoryTableScan" in plan
-    assert got.equals(want)
-
-
 def test_ccnet_buckets_ppl_tertiles_and_ordering(spark):
     """ccnet_buckets_ppl: with every language under the sample cap the
     cutoffs are exact, so buckets split each language into tertiles
@@ -1658,6 +1618,34 @@ def test_ccnet_buckets_ppl_tertiles_and_ordering(spark):
             assert heads.avg_nll_fp.max() <= mids.avg_nll_fp.min()
         if len(mids) and len(tails):
             assert mids.avg_nll_fp.max() <= tails.avg_nll_fp.min()
+
+
+def test_ccnet_buckets_ppl_matches_duckdb_oracle(spark):
+    """ccnet_buckets_ppl (checkpointed ppl_trigram_score_sql table plus
+    the Spark bucket tail) equals its DuckDB oracle, the whole pipeline
+    as one nested-CTE query, under the order-insensitive value hash of
+    scripts/validate_oracles.py."""
+    from pathlib import Path
+
+    import duckdb
+
+    from lingua_spark.ops.queries import (
+        FIXTURE_SF_DIR,
+        TABLES,
+        ccnet_buckets_ppl,
+        ccnet_buckets_ppl_oracle_sql,
+    )
+    from scripts.validate_oracles import norm_hash
+
+    sfd = str(Path(FIXTURE_SF_DIR).with_name("sf0.001"))
+    got = ccnet_buckets_ppl(spark, sfd).toPandas()
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfd}/{t}.parquet'")
+    want = con.execute(ccnet_buckets_ppl_oracle_sql()).df()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert len(got) == len(want) > 0
+    assert norm_hash(got) == norm_hash(want)
 
 
 def test_turn_dedup_crossconv_invariants_on_corpus(spark):
@@ -2452,43 +2440,6 @@ def test_model_train_ngrams_bit_matches_driver_trainer(spark):
         assert len(back) == len(got)
 
 
-def test_model_train_df_one_scan_twin(spark):
-    """model_train_df (persisted-counts, one corpus scan) is
-    value-identical to the SQL form; lazy mode shows both count
-    consumers reading the cache; default mode leaves no DataFrame
-    cache registered."""
-    from lingua_spark.ops.queries import (
-        SQL_QUERIES,
-        model_train_df,
-        register_views,
-    )
-
-    sfd = "/root/testdata/sf0.001"
-    register_views(spark, sfd)
-    key = ["lang", "n", "ngram"]
-    sql_form = (
-        spark.sql(SQL_QUERIES["model_train_ngrams"][0])
-        .toPandas()
-        .sort_values(key)
-        .reset_index(drop=True)
-    )
-    lazy = model_train_df(spark, sfd, release_cache=False)
-    plan = lazy._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 2, plan
-    got_lazy = lazy.toPandas().sort_values(key).reset_index(drop=True)
-    assert got_lazy.equals(sql_form)
-    lazy.lingua_release()  # drops the per-call view AND the counts cache
-
-    got = (
-        model_train_df(spark, sfd)
-        .toPandas()
-        .sort_values(key)
-        .reset_index(drop=True)
-    )
-    assert got.equals(sql_form)
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
 def test_model_train_df_feeds_packed_detection_models(spark):
     """End-to-end train-at-scale story: models trained by the Spark
     trainer over an enum-named transcript corpus are bit-identical to
@@ -3235,11 +3186,10 @@ def test_lazy_paths_surface_a_release_handle(spark):
     """release_cache=False results carry lingua_release(): the persisted
     intermediates are function-local, so without the handle the 'caller
     owns the release' contract was unfulfillable short of a session-wide
-    clearCache. Calling it drops the caches (and model_train_df's
-    per-call temp view)."""
+    clearCache. Calling it drops the caches."""
     from lingua_spark.ops.budget import token_budget_select
     from lingua_spark.ops.incremental import dedup_incremental_bloom
-    from lingua_spark.ops.queries import jaccard_pairs_df, model_train_df
+    from lingua_spark.ops.queries import jaccard_pairs_df
 
     sfd = "/root/testdata/sf0.001"
     jsc = spark.sparkContext._jsc
@@ -3252,20 +3202,10 @@ def test_lazy_paths_surface_a_release_handle(spark):
         jaccard_pairs_df(spark, sfd, release_cache=False),
         token_budget_select(spark, sfd, release_cache=False),
         dedup_incremental_bloom(spark, sfd, release_cache=False),
-        model_train_df(spark, sfd, release_cache=False),
     ]
-    views_with_counts = [
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("__model_train_counts_")
-    ]
-    # exactly one NEW per-call view from THIS model_train_df call (other
-    # tests in the session may have left their own — only count ours by
-    # requiring the set to shrink back after release below)
-    assert len(views_with_counts) >= 1
-    n_views_before_release = len(views_with_counts)
     for df in lazies:
         df.count()  # full consumption registers every persisted subtree
-    # releasing drops EXACTLY the five caches these calls created —
+    # releasing drops EXACTLY the four caches these calls created —
     # token_budget_select holds TWO (the tokenizing scan AND the
     # range-partitioned boundary bucket whose pids must stay frozen
     # between the offset collect and the window read-back; round 5).
@@ -3274,13 +3214,9 @@ def test_lazy_paths_surface_a_release_handle(spark):
     before_release = n_cached()
     for df in lazies:
         df.lingua_release()
-    assert n_cached() == before_release - 5
+    assert n_cached() == before_release - 4
     assert n_cached() <= base + 1  # nothing of ours leaks (base may
     #   hold an unrelated localCheckpoint block from earlier tests)
-    assert len([
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("__model_train_counts_")
-    ]) == n_views_before_release - 1
 
 
 def test_event_order_audit_measures_disorder(spark):
@@ -3543,12 +3479,27 @@ def test_oracle_sql_texts_frozen_r06():
     from pathlib import Path
 
     import __spark_entry__ as entry
+    from lingua_spark.ops.queries import (
+        _FIXTURES_DIR,
+        FIXTURE_ORACLE_QUERIES,
+        fixture_oracle_sql,
+    )
 
     frozen = json.loads(
         (Path(__file__).parent / "fixtures" / "oracle_r06_frozen.json")
         .read_text()
     )
-    cur = entry.oracle_sql()
+    # fixture-backed oracle texts embed the absolute fixtures directory
+    # of the checkout they were generated in; map this checkout's
+    # directory onto the snapshot's before comparing
+    probe = FIXTURE_ORACLE_QUERIES[0]
+    head, tail = fixture_oracle_sql(probe).split(str(_FIXTURES_DIR))
+    assert frozen[probe].startswith(head) and frozen[probe].endswith(tail)
+    frozen_dir = frozen[probe][len(head):-len(tail)]
+    cur = {
+        k: v.replace(str(_FIXTURES_DIR), frozen_dir)
+        for k, v in entry.oracle_sql().items()
+    }
     assert set(frozen) <= set(cur), sorted(set(frozen) - set(cur))
     drifted = [k for k in frozen if cur[k] != frozen[k]]
     assert not drifted, drifted
