@@ -103,16 +103,31 @@ def ship_package(spark: SparkSession) -> None:
     sc._lingua_spark_shipped = True
 
 
-_LIVE_BROADCASTS: list = []
+def _live_broadcasts(spark: SparkSession) -> list:
+    """The model broadcasts the UDF factories created on this session's
+    SparkContext. Kept on the context, so they are dropped with it and a
+    later context never sees a stopped one's broadcasts."""
+    sc = spark.sparkContext
+    if not hasattr(sc, "_lingua_live_broadcasts"):
+        sc._lingua_live_broadcasts = []
+    return sc._lingua_live_broadcasts
+
+
+def _broadcast_models(spark: SparkSession, value):
+    bc = spark.sparkContext.broadcast(value)
+    _live_broadcasts(spark).append(bc)
+    return bc
 
 
 def unload_models(spark: SparkSession) -> int:
     """Model lifecycle (U5 analog of `LanguageDetector.kt:661-677`,
     `unloadLanguageModels`): unpersist every model broadcast created by the
-    UDF factories in this session. Returns the number released."""
+    UDF factories on this session's SparkContext. Returns the number
+    released."""
+    live = _live_broadcasts(spark)
     n = 0
-    while _LIVE_BROADCASTS:
-        bc = _LIVE_BROADCASTS.pop()
+    while live:
+        bc = live.pop()
         try:
             bc.unpersist(blocking=False)
             n += 1
@@ -141,10 +156,9 @@ def make_assess_udf(spark: SparkSession, config: QualityConfig | None = None):
 
     ship_package(spark)
     config = config or QualityConfig()
-    bc = spark.sparkContext.broadcast(
-        (_models_for(config), fasttextish().weights, config)
+    bc = _broadcast_models(
+        spark, (_models_for(config), fasttextish().weights, config)
     )
-    _LIVE_BROADCASTS.append(bc)
 
     @F.pandas_udf(ASSESS_SCHEMA)
     def assess(texts: pd.Series) -> pd.DataFrame:
@@ -180,8 +194,7 @@ def make_multilang_udf(spark: SparkSession, config: QualityConfig | None = None)
     LanguageSection structs."""
     ship_package(spark)
     config = config or QualityConfig()
-    bc = spark.sparkContext.broadcast((_models_for(config), config))
-    _LIVE_BROADCASTS.append(bc)
+    bc = _broadcast_models(spark, (_models_for(config), config))
 
     @F.pandas_udf(SECTION_SCHEMA)
     def detect_multi(texts: pd.Series) -> pd.Series:
@@ -223,8 +236,7 @@ def make_detect_udf(spark: SparkSession, config: QualityConfig | None = None):
     """Detection-only UDF (U1/U2 analog): text -> (lang, confidence, map)."""
     ship_package(spark)
     config = config or QualityConfig()
-    bc = spark.sparkContext.broadcast((_models_for(config), config))
-    _LIVE_BROADCASTS.append(bc)
+    bc = _broadcast_models(spark, (_models_for(config), config))
 
     @F.pandas_udf(DETECT_SCHEMA)
     def detect(texts: pd.Series) -> pd.DataFrame:

@@ -2062,9 +2062,7 @@ def gopher_repetition_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..engine.udfs import ship_package
 
     ship_package(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    docs = sf_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def run(batches):
         for pdf in batches:
@@ -3219,9 +3217,69 @@ def fixture_oracle_sql(name: str) -> str:
     return f"SELECT * FROM read_parquet('{_FIXTURES_DIR}/expected_{name}.parquet')"
 
 
+def _leaf_files(spark: SparkSession, path: str) -> tuple | None:
+    """Signature of the files under ``path``: sorted (path, length,
+    modification time) of every leaf file, listed on the driver through
+    the Hadoop FileSystem the path resolves to (local, HDFS, S3, ...),
+    with the session's Hadoop conf — no Spark job. None if the path
+    cannot be listed; the caller then reads it uncached, so a missing
+    table raises the same error as an uncached read."""
+    from py4j.protocol import Py4JJavaError
+
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        it = jpath.getFileSystem(conf).listFiles(jpath, True)
+        files = []
+        while it.hasNext():
+            st = it.next()
+            files.append(
+                (st.getPath().toString(), st.getLen(), st.getModificationTime())
+            )
+    except Py4JJavaError:
+        return None
+    return tuple(sorted(files))
+
+
+def sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The ``name`` table of ``sf_dir`` as a DataFrame, memoized per
+    session. ``spark.read.parquet`` runs a schema-inference job per
+    table; the memo re-runs it only when the table's files change
+    (different leaf-file signature, see ``_leaf_files``), and otherwise
+    returns the DataFrame read before. It holds the tables of the most
+    recently used ``sf_dir`` only, so its size is bounded by TABLES."""
+    sf_dir = str(sf_dir)
+    path = f"{sf_dir}/{name}.parquet"
+    memo = getattr(spark, "_lingua_sf_tables", None)
+    if memo is None or memo[0] != sf_dir:
+        memo = spark._lingua_sf_tables = (sf_dir, {})
+    # list BEFORE reading: a rewrite in between leaves a stale signature
+    # beside fresh data, which only costs one extra read next call.
+    # Threads sharing the session race only to a lost entry or a
+    # duplicate read; a returned DataFrame always matches its files.
+    files = _leaf_files(spark, path)
+    hit = memo[1].get(path)
+    if files is not None and hit is not None and hit[0] == files:
+        return hit[1]
+    df = spark.read.parquet(path)
+    if files is not None:
+        memo[1][path] = (files, df)
+    return df
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
+    """Point the temp views TABLES at ``sf_dir``'s Parquet tables and
+    register the SQL kernels (``register_sql_udfs``).
+
+    Every call re-creates all the views, so a view the caller replaced
+    is re-pointed at ``sf_dir`` by the next call. A table's files are
+    listed on every call (driver-side, no Spark job), but it is read and
+    its schema inferred only on the first call or when its files have
+    changed since (``sf_table``); an unchanged ``sf_dir`` re-registers
+    with zero Spark jobs. A rewrite that keeps every file's path, length
+    and modification time is not seen."""
     for t in TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+        sf_table(spark, sf_dir, t).createOrReplaceTempView(t)
     register_sql_udfs(spark)
 
 
@@ -3237,7 +3295,7 @@ def make_sql_query(name: str):
 
 
 def dedup_minhash_cc(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
+    spark: SparkSession, sf_dir: str | None, checkpoint_dir: str | None = None
 ) -> DataFrame:
     """MinHash-LSH duplicate CLUSTERS: the union-find step the candidate
     generators feed. Connected components over the LSH pair graph (min
@@ -3267,10 +3325,12 @@ def dedup_minhash_cc(
     ``checkpoint_dir``: forwarded to ``connected_components`` — set it to
     a fault-tolerant path on a real cluster so per-round label tables
     survive executor loss (VERDICT r03 item 2); None keeps the fast
-    localCheckpoint default for local mode."""
+    localCheckpoint default for local mode. ``sf_dir=None`` runs against
+    already-registered views (``corpus_select_final`` registers once)."""
     from .graph import connected_components
 
-    register_views(spark, sf_dir)
+    if sf_dir is not None:
+        register_views(spark, sf_dir)
     pairs = spark.sql(_minhash_lsh_pairs("spark", min_bands=2))
     labels = connected_components(
         pairs, src="doc_a", dst="doc_b", checkpoint_dir=checkpoint_dir
@@ -3348,7 +3408,7 @@ def conv_select_with_neardup(
         "conv_id", F.col("selected").alias("keep_gates")
     )
     if neardup is None:
-        neardup = conv_minhash_cc(spark, sf_dir)
+        neardup = conv_minhash_cc(spark, None)
     cc = neardup.select(
         "conv_id", F.col("keep").alias("keep_neardup")
     )
@@ -3391,7 +3451,7 @@ def transcript_export_full(
     register_views(spark, sf_dir)
     exported = spark.sql(SQL_QUERIES["transcript_export_final"][0])
     if neardup is None:
-        neardup = conv_minhash_cc(spark, sf_dir)
+        neardup = conv_minhash_cc(spark, None)
     reps = neardup.filter("keep").select("conv_id")
     return exported.join(reps, "conv_id")
 
@@ -3509,7 +3569,7 @@ def corpus_select_final(
         "keep", "keep_quality"
     )
     if dedup is None:
-        dedup = dedup_minhash_cc(spark, sf_dir)
+        dedup = dedup_minhash_cc(spark, None)
     dedup = dedup.select(
         "doc_id", F.col("keep").alias("keep_dedup")
     )
@@ -3541,7 +3601,7 @@ FROM q JOIN cc ON q.doc_id = cc.doc_id
 
 def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map the documents table onto the transcript input_hint shape."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = sf_table(spark, sf_dir, "documents")
     return docs.select(
         F.concat(F.lit("conv-"), (F.col("doc_id") % 50).cast("string")).alias(
             "conv_id"
@@ -4217,7 +4277,7 @@ def detect_language_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full lingua-core detection over documents -> per-language counts."""
     from ..engine.udfs import make_detect_udf
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = sf_table(spark, sf_dir, "documents")
     detect = make_detect_udf(spark)
     return (
         docs.withColumn("d", detect(F.col("text")))
@@ -4236,7 +4296,7 @@ def detect_language_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver's gate scale."""
     from ..engine.udfs import make_detect_udf
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = sf_table(spark, sf_dir, "documents")
     detect = make_detect_udf(spark)
     return docs.select(
         "doc_id", detect(F.col("text")).getField("lang").alias("detected_lang")
@@ -4249,7 +4309,7 @@ def multilang_sections_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics are pinned by tests/test_multilang.py)."""
     from ..engine.udfs import make_multilang_udf
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = sf_table(spark, sf_dir, "documents")
     udf = make_multilang_udf(spark)
     return (
         docs.withColumn("sections", udf(F.col("text")))
@@ -4355,7 +4415,7 @@ def detect_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query is the aggregation operator, graded on shape + values."""
     from ..engine.udfs import make_detect_udf
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = sf_table(spark, sf_dir, "documents")
     detect = make_detect_udf(spark)
     return (
         docs.withColumn("d", detect(F.col("text")))

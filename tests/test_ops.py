@@ -493,6 +493,140 @@ def test_unload_models(spark):
     assert unload_models(spark) == 0
 
 
+def test_unload_models_releases_only_this_contexts_broadcasts():
+    """Model broadcasts are kept per SparkContext: after ``spark.stop()``
+    a new session's ``unload_models`` releases the one broadcast made on
+    it, not the two left behind by the stopped session. Runs in a fresh
+    process, since one JVM holds one SparkContext at a time."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    script = """
+from lingua_spark.engine.pipeline import build_session
+from lingua_spark.engine.udfs import make_detect_udf, unload_models
+
+old = build_session(master="local[1]", shuffle_partitions=1)
+make_detect_udf(old)
+make_detect_udf(old)
+old.stop()
+new = build_session(master="local[1]", shuffle_partitions=1)
+make_detect_udf(new)
+print(unload_models(new), unload_models(new))
+new.stop()
+"""
+    repo = Path(__file__).resolve().parent.parent
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=300, cwd=repo,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.split() == ["1", "0"]
+
+
+def _sf001():
+    from pathlib import Path
+
+    from lingua_spark.ops.queries import FIXTURE_SF_DIR
+
+    return str(Path(FIXTURE_SF_DIR).with_name("sf0.001"))
+
+
+SF001 = _sf001()
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return the Spark job ids it
+    launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_register_views_unchanged_dir_runs_no_job(spark):
+    """An unchanged sf_dir re-registers from the per-session memo: the
+    second call lists files on the driver and launches zero Spark jobs
+    (an unmemoized call runs one schema-inference job per table)."""
+    from lingua_spark.ops.queries import register_views
+
+    register_views(spark, SF001)
+    assert _jobs_in_group(
+        spark, "register_views_again", lambda: register_views(spark, SF001)
+    ) == []
+    assert spark.table("documents").count() == 500
+
+
+def test_register_views_rereads_a_rewritten_table(spark, tmp_path):
+    """Overwriting documents.parquet between two calls, the way a Spark
+    writer does (new part file, one more column): the second call re-reads
+    it, so queries see the new rows and the new schema."""
+    import shutil
+
+    import pandas as pd
+
+    from lingua_spark.ops.queries import TABLES, register_views
+
+    for t in TABLES:
+        if t != "documents":
+            shutil.copy(f"{SF001}/{t}.parquet", tmp_path / f"{t}.parquet")
+    docs = pd.read_parquet(f"{SF001}/documents.parquet")
+    table = tmp_path / "documents.parquet"
+
+    def write(pdf, part):
+        shutil.rmtree(table, ignore_errors=True)
+        table.mkdir()
+        pdf.to_parquet(table / f"part-{part}.parquet", index=False)
+
+    def rows():
+        return sorted(
+            tuple(r) for r in spark.sql(
+                "SELECT doc_id, text FROM documents"
+            ).collect()
+        )
+
+    def expect(pdf):
+        return sorted(zip(pdf.doc_id.tolist(), pdf.text.tolist()))
+
+    first = docs.iloc[:3]
+    second = docs.iloc[10:17].assign(n_words=docs.text.str.split().str.len())
+    write(first, 0)
+    register_views(spark, str(tmp_path))
+    assert rows() == expect(first)
+    write(second, 1)
+    register_views(spark, str(tmp_path))
+    assert rows() == expect(second)
+    assert spark.table("documents").columns == list(second.columns)
+
+
+def test_register_views_replaces_a_callers_view(spark):
+    """Views are re-created on every call, memo hit or not: a view the
+    caller pointed elsewhere is re-pointed at sf_dir."""
+    from lingua_spark.ops.queries import register_views
+
+    register_views(spark, SF001)
+    spark.createDataFrame([(1, "x")], ["doc_id", "text"]).createOrReplaceTempView(
+        "documents"
+    )
+    assert spark.table("documents").count() == 1
+    register_views(spark, SF001)
+    assert spark.table("documents").count() == 500
+
+
+def test_sf_table_memo_holds_one_dir(spark):
+    """The memo keeps only the most recently used sf_dir's tables."""
+    from lingua_spark.ops.queries import FIXTURE_SF_DIR, TABLES, register_views
+
+    register_views(spark, FIXTURE_SF_DIR)
+    register_views(spark, SF001)
+    sf_dir, entries = spark._lingua_sf_tables
+    assert sf_dir == SF001
+    assert sorted(entries) == sorted(f"{SF001}/{t}.parquet" for t in TABLES)
+
+
 def test_wav_decoder_values():
     """Real WAV PCM decode (VERDICT r02 item 10) with VALUE assertions:
     a 440 Hz sine at amplitude 0.5 has rms ~ 0.5/sqrt(2), peak ~ 0.5,
